@@ -29,6 +29,15 @@ Scale: appends are blind writes; the resolve window shuffles on the id
 key only; search is the zero-shuffle ``knn_point`` scan (or the
 persisted-index ANN path via :meth:`build_index` / :meth:`search_approx`
 for corpora where a scan is too slow).
+
+ANN serving has two paths over the same persisted per-cell index and the
+same per-cell search (``hnsw_partition.search_cell``). ONE query vector
+(:meth:`search_approx`) is routed and searched in-process on the driver,
+reading only its ``nprobe`` probed cells; Spark runs only the metadata
+lookup of the candidates (3 jobs). A DataFrame of many queries (streaming
+``start_knn_serving_ann``, ``hnsw_topk``, batch evaluation) goes through
+the distributed ``hnsw_search``, which shuffles the probed cells to the
+queries instead.
 """
 
 from __future__ import annotations
@@ -104,8 +113,10 @@ class VectorTable:
         )
 
         vectors = read_snapshot_vectors(spark, snapshot_dir)
-        dim = len(vectors.select("vector").first()["vector"])
-        vt = cls.create(spark, path, dim=dim, metric=metric)
+        first = vectors.select("vector").first()
+        if first is None:  # empty snapshot: dim waits for the first insert
+            return cls.create(spark, path, dim=None, metric=metric)
+        vt = cls.create(spark, path, dim=len(first["vector"]), metric=metric)
         vt.batch_insert(vectors)
         return vt
 
@@ -375,13 +386,29 @@ class VectorTable:
 
     def build_index(self, n_cells: int = 8, m: int = 8, ef_construction: int = 64) -> None:
         """Materialize the per-cell HNSW index for :meth:`search_approx`
-        (build-once/search-many, the reference's lifecycle)."""
+        (build-once/search-many, the reference's lifecycle). Bad input
+        raises ``ValueError`` naming the cause instead of a JVM error
+        from deep inside KMeans: ``n_cells`` or ``m`` below 2 before any
+        Spark job, a table with no live rows once the fit fails."""
         from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build
         from hnsw_vector_db_spark.operators.similarity import ivf_fit
 
-        assigned, centroids = ivf_fit(
-            self.table(), n_cells=n_cells, id_col="id", vector_col="vector"
-        )
+        if n_cells < 2:
+            raise ValueError(f"n_cells must be >= 2, got {n_cells}")
+        if m < 2:
+            raise ValueError(f"m must be >= 2, got {m}")
+        try:
+            assigned, centroids = ivf_fit(
+                self.table(), n_cells=n_cells, id_col="id", vector_col="vector"
+            )
+        except Exception:
+            # checked only once the fit failed, so a healthy build pays
+            # no extra job for it
+            if self.table().isEmpty():
+                raise ValueError(
+                    "cannot build an index over an empty table (no live rows)"
+                ) from None
+            raise
         idx_dir = os.path.join(self.path, "hnsw_index")
         hnsw_build(
             assigned, metric=self.meta["metric"], m=m,
@@ -397,11 +424,25 @@ class VectorTable:
         """ANN search over the materialized index — the reference's
         actual search path (`core/hnsw/graph.py:175-189`), with its ef
         knob (`server.py:34`) plus nprobe, and optional filtered search
-        (``where`` over the table, applied via the allowed-set
-        semi-join). Requires :meth:`build_index`; raises if the index
+        (``where`` over the table, applied to the over-fetched
+        candidates). Requires :meth:`build_index`; raises if the index
         predates the latest write (stale index = silent wrong results,
-        which the reference happily serves — we refuse)."""
-        from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_search
+        which the reference happily serves — we refuse).
+
+        The one query is answered IN-PROCESS: it is routed on the driver
+        and only the ``nprobe`` probed cells of the persisted index are
+        read and searched (``hnsw_search_local``; no Spark job). Spark
+        then runs only the metadata lookup — the candidates ride as a
+        small local frame joined to the table's rows with those ids — so
+        the returned lazy DataFrame costs a few jobs, not the ~11 of the
+        distributed ``hnsw_search`` plan, which stays the path for a
+        DataFrame of many queries. Same answer either way: the query is
+        carried as float32 like an ``array<float>`` query column, ranked
+        on the unrounded (dist, id), and reported with dist rounded to 6
+        decimals."""
+        from hnsw_vector_db_spark.operators.hnsw_partition import (
+            hnsw_search_local,
+        )
 
         if "centroids" not in self.meta:
             raise RuntimeError("no index: call build_index() first")
@@ -410,22 +451,24 @@ class VectorTable:
                 "index is stale (table mutated since build_index); rebuild"
             )
         validate_k(k)
-        index = self.spark.read.parquet(os.path.join(self.path, "hnsw_index"))
-        queries = self.spark.createDataFrame(
-            [(0, [float(x) for x in query])], "query_id long, query_vec array<float>"
+        q = np.asarray([float(x) for x in query], dtype=np.float32)
+        cand = hnsw_search_local(
+            os.path.join(self.path, "hnsw_index"), q,
+            np.array(self.meta["centroids"], dtype=np.float64),
+            k=k, ef=ef, nprobe=nprobe, metric=self.meta["metric"],
+            filtered=where is not None,
         )
-        allowed = None
+        rows = self.table().filter(F.col("id").isin(cand["id"].tolist()))
         if where is not None:
-            allowed = self.table().filter(where).select(F.col("id"))
-        hits = hnsw_search(
-            index, queries, np.array(self.meta["centroids"], dtype=np.float64),
-            k=k, ef=ef, nprobe=nprobe, metric=self.meta["metric"], id_col="id",
-            allowed=allowed,
-        )
+            rows = rows.filter(where)
+        by_dist = [F.col("dist").asc(), F.col("id").asc()]
         return (
-            hits.select(F.col("id"), F.col("dist"))
-            .join(self.table().select("id", "metadata"), "id", "left")
-            .orderBy(F.col("dist").asc(), F.col("id").asc())
+            self.spark.createDataFrame(cand, "id long, dist double")
+            .join(rows.select("id", "metadata"), "id")
+            .orderBy(*by_dist)
+            .limit(k)
+            .withColumn("dist", F.round("dist", 6))
+            .orderBy(*by_dist)
         )
 
     # -- introspection / persistence ----------------------------------------

@@ -377,7 +377,7 @@ def hnsw_build(
 
     ensure_package_shipped(assigned.sparkSession)
 
-    def per_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_cell(key, pdf):
         if pdf.empty:
             return pd.DataFrame(
                 columns=[
@@ -807,6 +807,104 @@ def assign_query_cells(
     return queries.select(query_id_col, query_vec_col).mapInPandas(route, schema)
 
 
+#: the INDEX_SCHEMA columns a search reads: ``e_prot`` (the trim-exempt
+#: parent edges) only matters to incremental inserts, so searches never
+#: ship it and a legacy artifact written before it existed searches alike
+SEARCH_COLS = [
+    "n", "dim", "metric", "entry", "ids", "levels",
+    "vec_bytes", "e_layer", "e_src", "e_dst",
+]
+
+#: default per-cell over-fetch factor of a filtered search
+OVER_FETCH = 4
+
+
+def fetch_sizes(k: int, ef: int, filtered: bool, over_fetch: int = OVER_FETCH):
+    """(k_fetch, ef_eff) for each probed cell. A filtered search
+    over-fetches ``k * over_fetch`` candidates per cell so enough
+    admissible ones survive the post-traversal filter; ef is inflated to
+    at least that many."""
+    k_fetch = k * max(over_fetch, 1) if filtered else k
+    return k_fetch, max(ef, k_fetch)
+
+
+def search_cell(st, Q, k_fetch: int, ef: int) -> list[list[tuple[int, float]]]:
+    """Search ONE persisted cell for every query row of ``Q``: per query,
+    up to ``k_fetch`` (vector id, dist) hits. ``st`` is one index row
+    holding the :data:`SEARCH_COLS` — a pandas row on the executors
+    (:func:`hnsw_search`), a dict on the driver
+    (:func:`hnsw_search_local`) — so both paths run the same per-cell
+    search. Reconstruction is O(edges) array slicing, no build work."""
+    local = LocalHNSW.from_state(
+        int(st["n"]), int(st["dim"]), st["metric"], int(st["entry"]),
+        st["levels"], st["vec_bytes"], st["e_layer"], st["e_src"], st["e_dst"],
+    )
+    ids = np.asarray(st["ids"], dtype=np.int64)
+    return [
+        [
+            (int(ids[loc]), float(dist))
+            for loc, dist in local.search(np.asarray(q, dtype=np.float64), k_fetch, ef)
+        ]
+        for q in Q
+    ]
+
+
+def _arrow_rows(tbl):
+    """Rows of a pyarrow table as dicts; list columns come out as numpy
+    arrays (no per-element Python objects)."""
+    import pyarrow as pa
+
+    cols = {name: tbl.column(name) for name in tbl.column_names}
+    for i in range(tbl.num_rows):
+        yield {
+            name: (
+                c[i].values.to_numpy(zero_copy_only=False)
+                if pa.types.is_list(c.type)
+                else c[i].as_py()
+            )
+            for name, c in cols.items()
+        }
+
+
+def hnsw_search_local(
+    index_path: str,
+    query,
+    centroids: np.ndarray,
+    k: int = 10,
+    ef: int = 64,
+    nprobe: int = 4,
+    metric: str = "cosine",
+    filtered: bool = False,
+):
+    """ONE query against a persisted index (:func:`hnsw_build` output
+    written as parquet at ``index_path``), answered in-process with no
+    Spark job: route on the driver (:func:`_route_cells`), read only the
+    probed cells' rows with pyarrow (a ``cell in (...)`` filter — row
+    groups of other cells are skipped, and a ``partitionBy("cell")``
+    layout prunes whole directories), and run :func:`search_cell` on
+    each. Cost grows with the probed cells, not with the index. This is
+    the single-query path of ``VectorTable.search_approx``; a DataFrame
+    of many queries goes through :func:`hnsw_search`, which searches the
+    same cells with the same helper inside executors.
+
+    Returns a pandas DataFrame (id, dist) of up to ``nprobe * k_fetch``
+    unranked candidates (:func:`fetch_sizes`); pass ``filtered=True``
+    when the caller prunes them with a predicate, so each cell
+    over-fetches like :func:`hnsw_search` with ``allowed=``."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    q = np.asarray(query, dtype=np.float64)
+    cells = _route_cells(q[None, :], np.asarray(centroids, dtype=np.float64), nprobe, metric)[0]
+    tbl = pq.read_table(
+        index_path, columns=SEARCH_COLS,
+        filters=[("cell", "in", [int(c) for c in cells])],
+    )
+    k_fetch, ef_eff = fetch_sizes(k, ef, filtered)
+    hits = [h for st in _arrow_rows(tbl) for h in search_cell(st, [q], k_fetch, ef_eff)[0]]
+    return pd.DataFrame(hits, columns=["id", "dist"])
+
+
 def hnsw_search(
     index: DataFrame,
     queries: DataFrame,
@@ -820,14 +918,23 @@ def hnsw_search(
     id_col: str = "vec_id",
     max_collect_queries: int = 100_000,
     allowed: DataFrame | None = None,
-    over_fetch: int = 4,
+    over_fetch: int = OVER_FETCH,
 ) -> DataFrame:
     """Search a MATERIALIZED per-cell index (:func:`hnsw_build` output —
-    persisted, cached, or read back from parquet) without rebuilding
-    anything: each probed cell reconstructs its graph from the stored
-    state (O(edges) array slicing, no distance evaluations) and runs the
-    beam search. The reference builds once and searches many
+    persisted, cached, or read back from parquet) for a DataFrame of
+    queries without rebuilding anything: each probed cell reconstructs
+    its graph from the stored state (O(edges) array slicing, no distance
+    evaluations) and runs the beam search (:func:`search_cell`). The
+    reference builds once and searches many
     (`core/hnsw/graph.py:127-189`); this is that lifecycle on Spark.
+
+    This is the path for query DataFrames (micro-batch serving,
+    :func:`hnsw_topk`, batch evaluation). ONE query vector against an
+    index persisted as parquet is cheaper in-process:
+    :func:`hnsw_search_local` (what ``VectorTable.search_approx`` uses)
+    reads the same probed cells with pyarrow and runs the same
+    :func:`search_cell`, skipping the ~11 Spark jobs this plan pays per
+    call (query collect, cogroup shuffle, rank window).
 
     Output (query_id, vec_id, dist, rank). The cogroup shuffles the index
     one row per cell and the routed queries once on cell id; per-cell
@@ -897,29 +1004,18 @@ def hnsw_search(
     qcells = spark.createDataFrame(
         lit_rows, f"{query_id_col} long, {query_vec_col} array<float>, cell int"
     )
-    index = index.filter(F.col("cell").isin(probed))
-
-    # filtered search over-fetches per cell so enough admissible
-    # candidates survive the post-traversal semi-join
-    k_fetch = k * max(over_fetch, 1) if allowed is not None else k
-    ef_eff = max(ef, k_fetch)
+    index = index.filter(F.col("cell").isin(probed)).select("cell", *SEARCH_COLS)
+    k_fetch, ef_eff = fetch_sizes(k, ef, allowed is not None, over_fetch)
 
     def per_cell(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         if idx_pdf.empty or q_pdf.empty:
             return pd.DataFrame(columns=[query_id_col, id_col, "dist"])
-        st = idx_pdf.iloc[0]
-        local = LocalHNSW.from_state(
-            int(st["n"]), int(st["dim"]), st["metric"], int(st["entry"]),
-            st["levels"], st["vec_bytes"], st["e_layer"], st["e_src"], st["e_dst"],
-            st.get("e_prot"),  # None for legacy pre-e_prot artifacts
-        )
-        ids = np.asarray(st["ids"], dtype=np.int64)
-        rows = []
-        for qid, qvec in zip(q_pdf[query_id_col], q_pdf[query_vec_col]):
-            for loc, dist in local.search(
-                np.asarray(qvec, dtype=np.float64), k_fetch, ef_eff
-            ):
-                rows.append((qid, int(ids[loc]), float(dist)))
+        hits = search_cell(idx_pdf.iloc[0], q_pdf[query_vec_col], k_fetch, ef_eff)
+        rows = [
+            (qid, vid, dist)
+            for qid, q_hits in zip(q_pdf[query_id_col], hits)
+            for vid, dist in q_hits
+        ]
         return pd.DataFrame(rows, columns=[query_id_col, id_col, "dist"])
 
     out_schema = f"{query_id_col} long, {id_col} long, dist double"

@@ -4,6 +4,7 @@ runs sf0.01 — tests/oracle_harness.py runs that on demand)."""
 
 from __future__ import annotations
 
+import importlib
 import sys
 
 import pytest
@@ -20,6 +21,17 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"vec_id", "dist", "lang", "source"}
+
+
+def test_unknown_stream_state_provider_fails_at_import(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", "leveldb")
+    try:
+        with pytest.raises(ValueError, match="'leveldb'.*hdfs, rocksdb"):
+            importlib.reload(entry_mod)
+    finally:
+        monkeypatch.undo()
+        importlib.reload(entry_mod)
+    assert entry_mod._STREAM_STATE_PROVIDER in entry_mod._PROVIDER_CLASSES
 
 
 def test_oracle_keys_subset_of_queries():

@@ -10,6 +10,8 @@ build path — with zero construction work at search time.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -71,6 +73,16 @@ def test_build_once_search_many(spark, fitted, tmp_path):
 
     inline = sorted(map(tuple, hnsw_topk(queries, assigned, centroids, k=5, ef=64, nprobe=2).collect()))
     assert r1 == inline
+
+
+def test_hnsw_build_plans_without_type_hint_warning(fitted):
+    """The per-cell build function carries no partial type hints, so
+    applyInPandas does not warn that it cannot infer an eval type."""
+    assigned, _, _ = fitted
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        hnsw_build(assigned)
+    assert not [w for w in caught if "eval type" in str(w.message)]
 
 
 def test_edges_derived_from_index_match_fresh_build(spark, fitted):
